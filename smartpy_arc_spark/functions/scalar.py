@@ -7,6 +7,7 @@ whole-stage codegen; no Python UDFs anywhere in this module.
 from __future__ import annotations
 
 import math
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -162,25 +163,33 @@ def restore_null_sentinels(
     return df.select(exprs)
 
 
-def compat_cast_for_write(df: DataFrame) -> DataFrame:
+def compat_cast_for_write(
+    df: DataFrame, in_range: Mapping[str, bool] | None = None
+) -> DataFrame:
     """C6 write-side coercions (arc_utils.py:786-805), applied column-wise:
 
       * bool → int32 (arc_utils.py:799-800)
       * int64 → int32 iff every value fits ±2147483647, else → float64
-        (arc_utils.py:792-798) — the range test is a single distributed
-        aggregate over all long columns, not a per-row decision.
+        (arc_utils.py:792-798).  ``in_range`` gives that decision for the
+        long columns whose values the caller already holds (see
+        :func:`pandas_int32_fits`); the rest are tested by one distributed
+        min/max aggregate, not a per-row decision.  (``max(abs(c))``
+        would overflow on ``Long.MIN_VALUE`` under ANSI mode.)
 
     Timestamps are already µs in Spark (the reference's ns→µs step,
     arc_utils.py:801-802, is a no-op here).
     """
     long_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.LongType)]
-    in_range: dict[str, bool] = {}
-    if long_cols:
+    in_range = dict(in_range or {})
+    todo = [c for c in long_cols if c not in in_range]
+    if todo:
         aggs = [
-            (F.max(F.abs(F.col(c))) <= F.lit(INT32_MAX)).alias(c) for c in long_cols
+            ((F.min(c) >= -INT32_MAX) & (F.max(c) <= INT32_MAX)).alias(c)
+            for c in todo
         ]
         row = df.agg(*aggs).first()
-        in_range = {c: bool(row[c]) if row[c] is not None else True for c in long_cols}
+        # all-NULL or empty → min/max NULL → fits
+        in_range.update({c: row[c] is not False for c in todo})
 
     exprs = []
     for field in df.schema.fields:
@@ -188,8 +197,25 @@ def compat_cast_for_write(df: DataFrame) -> DataFrame:
         if isinstance(field.dataType, T.BooleanType):
             exprs.append(c.cast(T.IntegerType()).alias(field.name))
         elif isinstance(field.dataType, T.LongType):
-            target = T.IntegerType() if in_range.get(field.name, True) else T.DoubleType()
+            target = T.IntegerType() if in_range[field.name] else T.DoubleType()
             exprs.append(c.cast(target).alias(field.name))
         else:
             exprs.append(c.alias(field.name))
     return df.select(exprs)
+
+
+def pandas_int32_fits(pdf) -> dict[str, bool]:
+    """The int64 → int32 range test of :func:`compat_cast_for_write` on a
+    pandas frame, per integer column by its Spark name: every non-null
+    value within ±INT32_MAX (all-null or empty → True), the same rule as
+    the Spark aggregate."""
+    import pandas as pd
+
+    out = {}
+    for name, s in pdf.items():
+        if pd.api.types.is_integer_dtype(s.dtype):
+            s = s.dropna()
+            out[str(name)] = s.empty or bool(
+                s.min() >= -INT32_MAX and s.max() <= INT32_MAX
+            )
+    return out

@@ -416,8 +416,11 @@ def minhash_band_candidates(
     composition — pinned by unit test.  Pass ``banded`` (from
     :func:`minhash_banded` over the same ``sigs``/``bands``) to share
     one band explode across several cap variants."""
-    sigs = sigs.cache()  # read twice: banding pass + signature re-attach
     if banded is None:
+        # read twice: banding pass + signature re-attach.  A supplied
+        # ``banded`` was built from the caller's frame, so a cache here
+        # would never be reused (nor unpersisted).
+        sigs = sigs.cache()
         banded = minhash_banded(
             sigs, id_col=id_col, num_hashes=num_hashes, bands=bands,
             portable_hash=portable_hash,

@@ -11,9 +11,14 @@ Iceberg/Delta, reduced to what the engine needs):
 - publishing is one atomic ``os.rename`` of the manifest into
   ``<table>/_versions/v{N}.json`` — readers either see a version fully or
   not at all; no reader ever observes a half-written file set;
-- reads load exactly the manifest's file list (``spark.read.parquet(*files)``),
-  so concurrent publishes never disturb a running read, and old versions
-  stay readable until explicitly vacuumed.
+- reads load exactly the manifest's file list, so concurrent publishes
+  never disturb a running read, and old versions stay readable until
+  explicitly vacuumed;
+- the manifest carries the version's Spark schema (``spark_schema``, the
+  written frame's ``schema.json()``), so a read passes it to the parquet
+  reader and launches no schema-inference job.  Manifests written before
+  the field existed fall back to inference through the package's
+  memoized parquet-read seam (``sources.scan.read_parquet``).
 
 Scale: the manifest holds file paths only; a 100 TB table is a few
 thousand paths — KBs of JSON.  Schema may evolve between versions (new
@@ -33,6 +38,9 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from smartpy_arc_spark.sources.scan import read_parquet
 
 
 def _versions_dir(table_dir: str) -> str:
@@ -113,6 +121,7 @@ def write_snapshot(
         "mode": mode,
         "committed_at": time.time(),
         "schema": schema_ddl,
+        "spark_schema": df.schema.json(),
         "files": files,
     }
     tmp = os.path.join(
@@ -136,7 +145,9 @@ def read_snapshot(
     files = manifest["files"]
     if not files:
         raise ValueError(f"version {manifest['version']} has no files")
-    return spark.read.parquet(*files)
+    stored = manifest.get("spark_schema")
+    schema = T.StructType.fromJson(json.loads(stored)) if stored else None
+    return read_parquet(spark, *files, schema=schema)
 
 
 def vacuum_snapshots(table_dir: str, *, keep_last: int = 2) -> list[str]:
@@ -178,6 +189,8 @@ def rollback_snapshot(table_dir: str, version: int) -> int:
         "parent": versions[-1],
         "mode": f"rollback:{version}",
         "committed_at": time.time(),
+        # the schema fields keep the append check and the inference-free read
+        **{k: manifest[k] for k in ("schema", "spark_schema") if k in manifest},
         "files": manifest["files"],
     }
     tmp = os.path.join(_versions_dir(table_dir), f".tmp-rb-{new_version}.json")

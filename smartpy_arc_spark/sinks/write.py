@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from smartpy_arc_spark.functions.scalar import compat_cast_for_write
 from smartpy_arc_spark.meta import tag_geometry
+from smartpy_arc_spark.sources.scan import read_parquet
 
 
 def _out_path(workspace: str, name: str, fmt: str = "parquet") -> str:
@@ -209,7 +210,7 @@ def copy_feats(
     if isinstance(spark_or_df, DataFrame):
         df = spark_or_df
     else:
-        df = spark_or_df.read.parquet(source)
+        df = read_parquet(spark_or_df, source)
     if where:
         df = df.where(where)
     if flds is not None:

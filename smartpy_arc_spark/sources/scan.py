@@ -19,7 +19,11 @@ optimizations the reference hand-delegates to the geodatabase engine).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import stat
+import threading
+from collections import OrderedDict
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +50,125 @@ def _resolve_path(workspace: str, name: str | None, fmt: str = "parquet") -> str
     if "." in os.path.basename(name):
         return os.path.join(workspace, name)
     return os.path.join(workspace, f"{name}.{fmt}")
+
+
+# -- the parquet-read seam ----------------------------------------------
+#
+# A plain ``spark.read.parquet(path)`` launches one Spark job to infer the
+# schema from the files' footers, and on small tables that job's dispatch
+# costs more than the read itself; a read given the schema launches none.  Every parquet read in the package
+# goes through :func:`read_parquet`, which remembers the schema Spark
+# inferred and hands it back on a repeat read of the same, unchanged files.
+
+# Bounded driver state: least-recently-used entries beyond this are dropped.
+SCHEMA_MEMO_MAX = 128
+_schema_memo: OrderedDict[str, T.StructType] = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+# Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+_GLOB_CHARS = frozenset("*?[]{}\\")
+
+
+def _spark_skips(name: str) -> bool:
+    """Spark's file-listing filter (``InMemoryFileIndex.shouldFilterOutPathName``):
+    ``_``/``.`` names are not data, except ``k=v`` partition directories
+    and the parquet summary files."""
+    exclude = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return exclude and not name.startswith(("_common_metadata", "_metadata"))
+
+
+def _raise(err: OSError) -> None:
+    raise err
+
+
+def _schema_key(spark: SparkSession, paths: Sequence[str]) -> str | None:
+    """Digest of what parquet schema inference depends on: the paths, each
+    data file Spark would list under them (path, size, mtime, ctime,
+    inode — ctime because ``os.utime`` can restore an mtime but not a
+    ctime), and the inference confs.  ``None`` when the memo must not be
+    used: a non-local URI, a relative path (the JVM may resolve it against
+    another working directory), a glob, a missing path, or no data file —
+    those get plain inference, so Spark raises its own errors."""
+    if not paths:
+        return None
+    h = hashlib.sha256()
+    n_files = 0
+    for p in paths:
+        # a URI (``s3a://…``, ``file:/…``) is not an absolute local path
+        if (not isinstance(p, str) or not os.path.isabs(p)
+                or _GLOB_CHARS.intersection(p)):
+            return None
+        try:
+            st = os.stat(p)
+            if not stat.S_ISDIR(st.st_mode):
+                listing = [(p, st)]
+            else:
+                listing = []
+                for root, dirs, files in os.walk(p, onerror=_raise):
+                    dirs[:] = sorted(d for d in dirs if not _spark_skips(d))
+                    for f in sorted(files):
+                        if not _spark_skips(f):
+                            fp = os.path.join(root, f)
+                            listing.append((fp, os.stat(fp)))
+        except OSError:
+            return None
+        h.update(f"{p}\0".encode())
+        for fp, st in listing:
+            h.update(f"{fp}\0{st.st_size}\0{st.st_mtime_ns}\0"
+                     f"{st.st_ctime_ns}\0{st.st_ino}\0".encode())
+        n_files += len(listing)
+    if n_files == 0:
+        return None
+    for k in _INFERENCE_CONFS:
+        h.update(f"{k}={spark.conf.get(k, None)}\0".encode())
+    return h.hexdigest()
+
+
+def read_parquet(
+    spark: SparkSession, *paths: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job on
+    a repeat read.
+
+    The first read of a set of files infers the schema as usual and the
+    result is memoized under :func:`_schema_key`: the paths, every data
+    file under them with its size, mtime, ctime and inode, and the session
+    confs that change parquet inference.  A later read whose key matches
+    passes that schema to the reader and launches no job; any change to
+    the files or those confs changes the key.  At most
+    ``SCHEMA_MEMO_MAX`` schemas are kept.  Non-local URIs, relative paths
+    and globs always get plain inference.  A caller that already knows
+    the schema passes ``schema`` (the snapshot manifest does)."""
+    key = None
+    if schema is None:
+        key = _schema_key(spark, paths)
+        if key is not None:
+            with _schema_memo_lock:
+                schema = _schema_memo.get(key)
+                if schema is not None:
+                    _schema_memo.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    if key is not None:
+        with _schema_memo_lock:
+            _schema_memo[key] = df.schema
+            while len(_schema_memo) > SCHEMA_MEMO_MAX:
+                _schema_memo.popitem(last=False)
+    return df
 
 
 def _case_insensitive_resolve(
@@ -127,6 +250,14 @@ def scan(
         SHAPE@AREA/SHAPE@LENGTH columns from the geometry column before it
         is dropped (arc_utils.py:692-701); ``geom_col`` overrides the
         role-metadata lookup.
+
+    Parquet tables are read through :func:`read_parquet`: a repeat scan of
+    unchanged files reuses the schema inferred the first time and
+    launches no Spark job.  The memo keys on the resolved path, each data
+    file Spark would list under it (path, size, mtime, ctime, inode) and
+    the session confs that change parquet inference (``nanosAsLong``,
+    ``binaryAsString``, ``int96AsTimestamp``, ``inferTimestampNTZ``,
+    ``caseSensitive``, ``mergeSchema``, partition type inference).
     """
     path = _resolve_path(workspace, class_name, fmt)
     if nanos_ts_cols:
@@ -140,7 +271,7 @@ def scan(
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.read
     if fmt == "parquet":
-        df = reader.parquet(path)
+        df = read_parquet(spark, path)
     elif fmt == "csv":
         if schema is not None:
             # explicit schema: single pass over the file — inferSchema=True

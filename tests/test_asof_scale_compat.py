@@ -141,6 +141,44 @@ def test_compat_pandas_to_arc_roundtrip(spark, tmp_path):
     assert dict(back.dtypes) == {"a": "int", "flag": "int"}
 
 
+def test_compat_int64_range_pandas_path_matches_spark_path(spark, tmp_path):
+    """The driver-side int64→int32 range test on the pandas frame decides
+    exactly like the Spark aggregate, Long.MIN_VALUE included (where
+    max(abs(c)) overflowed under ANSI mode)."""
+    from smartpy_arc_spark import compat
+    from smartpy_arc_spark.functions.scalar import (
+        compat_cast_for_write,
+        pandas_int32_fits,
+    )
+
+    full = pd.DataFrame({
+        "fits": [2147483647, -2147483647],
+        "over": [2147483648, 0],
+        "under": [-2147483648, 0],
+        "min_long": [-2**63, 1],
+        "all_null": pd.array([None, None], dtype="Int64"),
+    })
+    # an empty frame needs its schema given: createDataFrame cannot infer it
+    empty = pd.DataFrame({"a": pd.Series([], dtype="int64")})
+    spark_path = {}
+    for pdf, schema, want in (
+        (full, None, {"fits": "int", "over": "double", "under": "double",
+                      "min_long": "double", "all_null": "int"}),
+        (empty, "a long", {"a": "int"}),
+    ):
+        sdf = spark.createDataFrame(pdf, schema)
+        via_pandas = compat_cast_for_write(sdf, in_range=pandas_int32_fits(pdf))
+        via_spark = spark_path[len(pdf)] = compat_cast_for_write(sdf)
+        assert via_pandas.schema == via_spark.schema
+        assert dict(via_pandas.dtypes) == want
+        assert via_pandas.collect() == via_spark.collect()
+    # end to end: the written table is the Spark path's frame
+    _, back = compat.pandas_to_arc(full, str(tmp_path), "t",
+                                   get_cursor=True, overwrite=True)
+    assert back.dtypes == spark_path[len(full)].dtypes
+    assert sorted(back.collect()) == sorted(spark_path[len(full)].collect())
+
+
 def test_compat_deprecated_join_warns():
     from smartpy_arc_spark import compat
 

@@ -232,3 +232,27 @@ def test_minhash_shared_band_explode_identical(spark):
         got = sorted(map(tuple, minhash_band_candidates(
             sigs, star, max_bucket_size=cap, banded=banded).collect()))
         assert got == want, cap
+
+
+def test_minhash_supplied_banded_leaves_sigs_uncached(spark):
+    """With ``banded`` supplied the signatures are not cached: that cache
+    was never reused and never unpersisted."""
+    from smartpy_arc_spark.operators.dedup import (
+        minhash_band_candidates,
+        minhash_banded,
+        minhash_prepare,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma {i % 5} delta {i % 2}") for i in range(30)],
+        "doc_id long, text string",
+    )
+    sigs, star = minhash_prepare(docs, shingle_mode="word", shingle_size=2)
+    banded = minhash_banded(sigs, materialize=True)
+    before = sigs.storageLevel
+    minhash_band_candidates(sigs, star, banded=banded).collect()
+    assert sigs.storageLevel == before
+    # building the band explode itself still caches the twice-read input
+    minhash_band_candidates(sigs, star).collect()
+    assert sigs.storageLevel.useMemory
+    sigs.unpersist()

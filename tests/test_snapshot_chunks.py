@@ -60,6 +60,22 @@ def test_snapshot_schema_evolution_per_version(spark, tmp_path):
     assert read_snapshot(spark, table, 2).columns == ["id", "extra"]
 
 
+def test_rollback_keeps_schema_for_append_check(spark, tmp_path):
+    """A rollback commit carries the rolled-back version's schema, so a
+    later append is still checked against it."""
+    table = str(tmp_path / "t")
+    write_snapshot(spark.range(3), table)
+    write_snapshot(spark.range(3).withColumn("x", F.lit(1.5)), table)
+    v3 = rollback_snapshot(table, 1)
+    m1, m3 = read_manifest(table, 1), read_manifest(table, v3)
+    assert m3["schema"] == m1["schema"]
+    assert m3["spark_schema"] == m1["spark_schema"]
+    with pytest.raises(ValueError, match="append schema mismatch"):
+        write_snapshot(spark.createDataFrame([("a",)], "id string"), table,
+                       mode="append")
+    assert read_snapshot(spark, table).dtypes == [("id", "bigint")]
+
+
 def test_chunk_documents_coverage_and_tail(spark):
     n_tokens = 100
     text = " ".join(f"w{i}" for i in range(n_tokens))
